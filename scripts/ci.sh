@@ -28,6 +28,12 @@ python3 scripts/output_dtypes.py "$OUT"
 python3 scripts/check.py "$SF_DIR" "$OUT"
 python3 scripts/golden.py check "$OUT" golden/sf0.01.json
 
+# perfbench is a separate sbt build over the engine (it calls
+# Derived.rebuild*, CPALS.fit, NnHals.fit, Tucker.hosvd); `sbt test`
+# never compiles it, so an engine rename would break the benchmark
+# silently. Its smoke tests build it and run both workloads small.
+python3 perfbench/test_smoke.py
+
 # Scaling tripwire (VERDICT r4 #7): the sf0.001 bench leg is seconds-cheap;
 # a generous 3x per-family budget catches an accidentally super-linear
 # rewrite (the Q99-HOF class of bug) before it reaches a judge. Budgets are

@@ -10,21 +10,25 @@ import org.apache.spark.sql.functions._
   * every consumer from the artifact (the materialized-view mechanism the
   * round-4 verdict named as the engine's last architecture gap).
   *
-  * The first (and so far only) derived relation is the co-order part
-  * graph: Q103 (triangles), Q106 (PageRank), and Q107 (association
-  * rules) all consume the same ~lineitem-squared pair relation, and each
-  * independently re-ran the order-keyed pair expansion + wide distinct
-  * every execution. At 100 TB that edge build dwarfs the per-query
-  * algorithm cost; here it runs once per dataset and lands on disk
-  * bucketed by `a` (sorted by a, b), so consumers that join or aggregate
-  * on the leading edge endpoint start from a co-located, sorted layout
-  * with no exchange under the join (the `ScaleHygieneSpec` bucketed-join
-  * machinery, now applied to a derived relation instead of a base table).
+  * The artifacts, by name (source table of the cache key):
+  *  - `co_pairs` (lineitem): co-order part pairs with their counts — the
+  *    graph family (Q103/Q106/Q107 and the traversal gates).
+  *  - `co_tri` (lineitem, built from `co_pairs`): per-node triangle counts.
+  *  - `lpa_labels` (lineitem, built from `co_pairs`): LPA community labels.
+  *  - `neardup_pairs` (documents): verified shingle-Jaccard ≥ 0.6 pairs.
+  *  - `neardup_cc` (documents, built from `neardup_pairs`): near-dup clusters.
+  *  - `daily_grid` (events): the zero-filled per-type daily revenue grid.
+  *  - `fastss2_k<k>` (part): FastSS deletion signatures of part names.
+  * At 100 TB each build dwarfs the per-query algorithm cost; here it runs
+  * once per dataset and lands on disk bucketed (and sorted) on its
+  * consumers' key, so they start from a co-located, sorted layout with no
+  * exchange under the join (the `ScaleHygieneSpec` bucketed-join
+  * machinery, applied to a derived relation instead of a base table).
   *
   * Artifact lifecycle:
-  *  - Cache key = md5 of the dataset path + the lineitem file listing
-  *    (names, sizes, mtimes) — regenerated data invalidates the artifact;
-  *    a production deployment would version artifacts explicitly.
+  *  - Cache key = md5 of the dataset path + the source table's file
+  *    listing (names, sizes, mtimes) — regenerated data invalidates the
+  *    artifact; a production deployment would version artifacts explicitly.
   *  - Location = `spark.graft.derivedDir` (conf) or
   *    `java.io.tmpdir/graft-derived`; never inside the (read-only)
   *    dataset directory.
@@ -33,10 +37,8 @@ import org.apache.spark.sql.functions._
   *    re-registers the same external bucketed table by DDL instead of
   *    rebuilding.
   *
-  * Storage is (a, b, n_pairs) — pair counts, NOT just distinct edges:
-  * the count column is free at build time (same shuffle), Q107 needs it,
-  * and Q103/Q106 get their distinct edge list by projection (every
-  * stored pair is distinct by construction of the groupBy).
+  * Each artifact's layout is one [[Artifact]] value; [[getOrBuild]]
+  * generates both the bucketed write and the fresh-session DDL from it.
   */
 object Derived {
 
@@ -74,10 +76,16 @@ object Derived {
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_pairs"))
 
-  private def datasetKey(spark: SparkSession, dir: String): String =
-    datasetKeyFor(spark, dir, "lineitem")
+  /** One artifact's layout: catalog table `graft_<name>_<key>` over the
+    * directory `<derivedDir>/<name>_<key>`, `key` fingerprinting the
+    * `source` table's files; written by `build` into `buckets` files
+    * bucketed by `bucketBy` and sorted by `sortBy`.
+    */
+  private final case class Artifact(name: String, source: String,
+      bucketBy: String, sortBy: Seq[String], buckets: Int = 8)(
+      val build: (SparkSession, String) => DataFrame)
 
-  private def datasetKeyFor(spark: SparkSession, dir: String,
+  private def datasetKey(spark: SparkSession, dir: String,
       tableName: String): String = {
     val src = new Path(s"$dir/$tableName.parquet")
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -96,62 +104,86 @@ object Derived {
     spark.conf.getOption("spark.graft.derivedDir")
       .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft-derived")
 
-  /** Get-or-build the co-order pair-count artifact for a dataset.
-    * Subsequent calls (same session or a fresh one) read the bucketed
-    * table; the expensive expansion runs at most once per dataset
-    * fingerprint.
+  /** The artifact's catalog table name and directory for the dataset. */
+  private def place(spark: SparkSession, dir: String, a: Artifact): (String, Path) = {
+    val key = datasetKey(spark, dir, a.source)
+    (s"graft_${a.name}_$key", new Path(s"${baseDir(spark)}/${a.name}_$key"))
+  }
+
+  /** Get-or-build `a` for the dataset at `dir`, after dropping the
+    * artifacts in `fresh` (the forced rebuilds, which the bench times as
+    * their own legs so query timings are pure consumers and stale state
+    * can never flatter them). Subsequent calls, in this session or a
+    * fresh one, read the bucketed table: the build runs at most once per
+    * dataset fingerprint. One lock serializes every build; it is
+    * reentrant, so a build may read another artifact.
     */
-  def coOrderPairCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_pairs_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/co_pairs_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      // Fresh session, artifact already on disk: register the external
-      // bucketed table over the existing files (written by the bucketed
-      // save below, so the bucket-file layout matches the DDL).
-      spark.sql(
-        s"""CREATE TABLE $table (a BIGINT, b BIGINT, n_pairs BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (a) SORTED BY (a, b) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
+  private def getOrBuild(spark: SparkSession, dir: String, a: Artifact,
+      fresh: Seq[Artifact] = Nil): DataFrame = synchronized {
+    fresh.foreach(drop(spark, dir, _))
+    val (table, loc) = place(spark, dir, a)
+    if (!spark.catalog.tableExists(table)) {
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // An empty artifact leaves no bucket file to read a schema from, so
+      // it is rebuilt rather than re-registered.
+      if (fs.exists(new Path(loc, "_SUCCESS"))
+          && fs.globStatus(new Path(loc, "*.parquet")).nonEmpty) {
+        // Fresh session, artifact already on disk: register the external
+        // bucketed table over the existing files. Spark needs a column
+        // list beside CLUSTERED BY; the files' own schema is that list.
+        val columns = spark.read.parquet(loc.toString).schema.toDDL
+        spark.sql(
+          s"""CREATE TABLE $table ($columns)
+             |USING PARQUET
+             |CLUSTERED BY (${a.bucketBy}) SORTED BY (${a.sortBy.mkString(", ")})
+             |INTO ${a.buckets} BUCKETS
+             |LOCATION '$loc'""".stripMargin)
+      } else {
+        a.build(spark, dir)
+          .write.mode("overwrite")
+          .bucketBy(a.buckets, a.bucketBy).sortBy(a.sortBy.head, a.sortBy.tail: _*)
+          .option("path", loc.toString)
+          .saveAsTable(table)
+      }
     }
-    buildCoOrderPairCounts(graft.Catalog(spark, dir).lineitem)
-      .write.mode("overwrite")
-      .bucketBy(8, "a").sortBy("a", "b")
-      .option("path", loc)
-      .saveAsTable(table)
     spark.table(table)
   }
 
-  /** Drop and rebuild the artifact — the bench uses this so the build
-    * cost is timed as its own leg and query timings are pure consumers
-    * (stale /tmp state can never flatter them).
-    */
-  def rebuildCoOrderPairCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_pairs_$key"
+  /** Drop the artifact's catalog table and delete its files. */
+  private def drop(spark: SparkSession, dir: String, a: Artifact): Unit = {
+    val (table, loc) = place(spark, dir, a)
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/co_pairs_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    coOrderPairCounts(spark, dir)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
   }
 
-  /** Get-or-build the near-dup cluster-assignment artifact: the
-    * (rep, member) connected-components relation over the verified
-    * shingle-Jaccard ≥ 0.6 pair graph (Q67's exact pipeline — PPJoin-
-    * filtered candidate discovery + O(log n) star contraction). Four
-    * gates consume this relation (Q67 cluster listing, Q68 min-id
-    * retention, Q187 size histogram, Q196 quality-aware selection);
-    * before this artifact each re-ran the whole discovery+CC pipeline,
-    * which at 100 TB is the difference between clustering the corpus
-    * once per data drop and four times per report batch. The bench
-    * times the build as its own `neardup_build` leg, so consumer
-    * timings stay honest.
+  /** Storage is (a, b, n_pairs) — pair counts, NOT just distinct edges:
+    * the count column is free at build time (same shuffle), Q107 needs it,
+    * and Q103/Q106 get their distinct edge list by projection (every
+    * stored pair is distinct by construction of the groupBy). Bucketed
+    * by `a` so consumers that join or aggregate on the leading edge
+    * endpoint start co-located.
     */
+  private val CoPairs = Artifact("co_pairs", "lineitem", "a", Seq("a", "b"))(
+    (spark, dir) => buildCoOrderPairCounts(graft.Catalog(spark, dir).lineitem))
+
+  /** Get-or-build the co-order pair-count artifact: Q103 (triangles),
+    * Q106 (PageRank), Q107 (association rules) and the graph family all
+    * consume this ~lineitem-squared pair relation, which each used to
+    * re-expand per execution.
+    */
+  def coOrderPairCounts(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, CoPairs)
+
+  /** Forced fresh rebuild of the pair-count artifact (bench leg). */
+  def rebuildCoOrderPairCounts(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, CoPairs, fresh = Seq(CoPairs))
+
+  private val NearDupPairs =
+    Artifact("neardup_pairs", "documents", "doc_lo", Seq("doc_lo", "doc_hi"))(
+      (spark, dir) =>
+        TextOps.jaccardFromTokens(spark, NearDup.shingles(graft.Catalog(spark, dir)), 0.6)
+          .select(col("doc_lo"), col("doc_hi"), col("jaccard")))
+
   /** Get-or-build the verified shingle-Jaccard ≥ 0.6 pair relation
     * (doc_lo, doc_hi, jaccard) — the discovery output of the near-dup
     * pipeline. Q49 (pair listing) and Q166 (cross-source rollup) consume
@@ -168,29 +200,18 @@ object Derived {
     * so the artifact's gate hashes are byte-identical; LSH-vs-exact set
     * equality at fixture scale is pinned in NearDupSpec.
     */
-  def nearDupPairs(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "documents")
-    val table = s"graft_neardup_pairs_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/neardup_pairs_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (doc_lo BIGINT, doc_hi BIGINT, jaccard DOUBLE)
-           |USING PARQUET
-           |CLUSTERED BY (doc_lo) SORTED BY (doc_lo, doc_hi) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    val c = graft.Catalog(spark, dir)
-    TextOps.jaccardFromTokens(spark, NearDup.shingles(c), 0.6)
-      .select(col("doc_lo"), col("doc_hi"), col("jaccard"))
-      .write.mode("overwrite")
-      .bucketBy(8, "doc_lo").sortBy("doc_lo", "doc_hi")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
+  def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, NearDupPairs)
+
+  private val CoTri = Artifact("co_tri", "lineitem", "node", Seq("node"))(
+    (spark, dir) =>
+      // r14: the decomposed per-node aggregation (closing edges contribute
+      // their intersection size, apexes explode) — T + 2m aggregation rows
+      // instead of 3T corner rows; identical counts (AnalyticsOpsSpec).
+      Graphs.triangleCountsPerNode(
+          coOrderPairCounts(spark, dir).select(col("a"), col("b")))
+        .select(col("node").cast("long").as("node"),
+          col("n_triangles").cast("long").as("n_triangles")))
 
   /** Get-or-build the per-node triangle-count artifact of the co-order
     * graph: (node, n_triangles) from ONE degree-oriented enumeration
@@ -199,51 +220,23 @@ object Derived {
     * at 100 TB the enumerated wedge mass (O(m^1.5), the r12 sweep's
     * 75 GB-spill Q103 leg) is the whole cost, and it was paid twice
     * per report batch (×3 again under the bench's 3-run protocol).
-    * Same discipline as [[nearDupClusters]]: the expensive shared
-    * relation is built once per dataset drop, bucketed on its join
-    * key, and the bench times the build as its own `tri_build` leg so
-    * consumer timings stay honest.
     */
-  def triangleCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_tri_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/co_tri_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (node BIGINT, n_triangles BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (node) SORTED BY (node) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    // r14: the decomposed per-node aggregation (closing edges contribute
-    // their intersection size, apexes explode) — T + 2m aggregation rows
-    // instead of 3T corner rows; identical counts (AnalyticsOpsSpec).
-    Graphs.triangleCountsPerNode(
-        coOrderPairCounts(spark, dir).select(col("a"), col("b")))
-      .select(col("node").cast("long").as("node"),
-        col("n_triangles").cast("long").as("n_triangles"))
-      .write.mode("overwrite")
-      .bucketBy(8, "node").sortBy("node")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
+  def triangleCounts(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, CoTri)
 
   /** Forced fresh rebuild of the triangle-count artifact (bench leg).
     * Runs AFTER [[rebuildCoOrderPairCounts]] — it reads the pair artifact.
     */
-  def rebuildTriangleCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_tri_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/co_tri_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    triangleCounts(spark, dir)
-  }
+  def rebuildTriangleCounts(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, CoTri, fresh = Seq(CoTri))
+
+  private val NearDupCc = Artifact("neardup_cc", "documents", "rep", Seq("rep", "member"))(
+    (spark, dir) =>
+      // Adaptive CC (r13): the verified dup-pair graph is a sparse side
+      // output; under the probe budget the driver union-find replaces the
+      // star-contraction loop's 2-jobs-per-round fixpoint — same labels.
+      NearDup.connectedComponentsAdaptive(
+        nearDupPairs(spark, dir).select(col("doc_lo"), col("doc_hi"))))
 
   /** Get-or-build the near-dup cluster-assignment artifact: the
     * (rep, member) connected-components relation over
@@ -251,31 +244,21 @@ object Derived {
     * consume this relation; before these artifacts each re-ran the
     * whole discovery+CC pipeline per report.
     */
-  def nearDupClusters(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "documents")
-    val table = s"graft_neardup_cc_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/neardup_cc_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (rep BIGINT, member BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (rep) SORTED BY (rep, member) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    val pairs = nearDupPairs(spark, dir).select(col("doc_lo"), col("doc_hi"))
-    // Adaptive CC (r13): the verified dup-pair graph is a sparse side
-    // output; under the probe budget the driver union-find replaces the
-    // star-contraction loop's 2-jobs-per-round fixpoint — same labels.
-    NearDup.connectedComponentsAdaptive(pairs)
-      .write.mode("overwrite")
-      .bucketBy(8, "rep").sortBy("rep", "member")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
+  def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, NearDupCc)
+
+  /** Forced fresh rebuild of the near-dup artifacts (pairs and clusters)
+    * for the bench.
+    */
+  def rebuildNearDupClusters(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, NearDupCc, fresh = Seq(NearDupPairs, NearDupCc))
+
+  private val LpaLabels = Artifact("lpa_labels", "lineitem", "node", Seq("node"))(
+    (spark, dir) =>
+      Graphs.labelPropagation(
+          coOrderPairCounts(spark, dir).filter(col("n_pairs") >= 2).select(col("a"), col("b")),
+          Graphs.LpaRounds)
+        .select(col("node").cast("long").as("node"), col("label").cast("long").as("label")))
 
   /** Get-or-build the LPA community-label artifact: the deterministic
     * 3-round min-tiebreak label-propagation assignment (node, label)
@@ -286,42 +269,12 @@ object Derived {
     * relation per data drop. Bucketed by node so Q342's per-endpoint
     * label joins start co-located.
     */
-  def lpaLabels(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_lpa_labels_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/lpa_labels_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (node BIGINT, label BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (node) SORTED BY (node) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    val edges = coOrderPairCounts(spark, dir)
-      .filter(col("n_pairs") >= 2).select(col("a"), col("b"))
-    Graphs.labelPropagation(edges, Graphs.LpaRounds)
-      .select(col("node").cast("long").as("node"),
-        col("label").cast("long").as("label"))
-      .write.mode("overwrite")
-      .bucketBy(8, "node").sortBy("node")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
+  def lpaLabels(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, LpaLabels)
 
   /** Forced fresh rebuild of the LPA-labels artifact for the bench. */
-  def rebuildLpaLabels(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_lpa_labels_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/lpa_labels_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    lpaLabels(spark, dir)
-  }
+  def rebuildLpaLabels(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, LpaLabels, fresh = Seq(LpaLabels))
 
   /** The unmaterialized build of the zero-filled per-type daily
     * revenue-cents grid on the GLOBAL [dmin, dmax] day spine — the shared
@@ -345,6 +298,10 @@ object Derived {
         coalesce(col("v"), lit(0L)).as("v"))
   }
 
+  private val DailyGrid =
+    Artifact("daily_grid", "events", "event_type", Seq("event_type", "day"), buckets = 4)(
+      (spark, dir) => buildDailyCentsGrid(graft.Catalog(spark, dir).events))
+
   /** Get-or-build the daily-cents-grid artifact. Before this artifact,
     * every one of the ~34 consumer gates re-ran the full `events` scan +
     * (type, day) aggregate per execution — at 100 TB that is 34 corpus
@@ -353,41 +310,31 @@ object Derived {
     * window PARTITION BY event_type ORDER BY day — starts from a
     * co-located sorted layout.
     */
-  def dailyCentsGrid(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "events")
-    val table = s"graft_daily_grid_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/daily_grid_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (event_type STRING, day BIGINT, v BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (event_type) SORTED BY (event_type, day) INTO 4 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    buildDailyCentsGrid(graft.Catalog(spark, dir).events)
-      .write.mode("overwrite")
-      .bucketBy(4, "event_type").sortBy("event_type", "day")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
+  def dailyCentsGrid(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, DailyGrid)
 
   /** Forced fresh rebuild of the daily-grid artifact for the bench. */
-  def rebuildDailyCentsGrid(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "events")
-    val table = s"graft_daily_grid_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/daily_grid_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    dailyCentsGrid(spark, dir)
+  def rebuildDailyCentsGrid(spark: SparkSession, dir: String): DataFrame =
+    getOrBuild(spark, dir, DailyGrid, fresh = Seq(DailyGrid))
+
+  private def fastss(k: Int): Artifact = {
+    val buckets = 32
+    Artifact(s"fastss2_k$k", "part", "sig", Seq("sig", "p_partkey"), buckets)(
+      (spark, dir) =>
+        graft.Catalog(spark, dir).part
+          .select(col("p_brand"), col("p_partkey"),
+            explode(array_distinct(expr(s"graft_deletion_hashes(p_name, $k)")))
+              .as("v"))
+          .select(col("p_partkey"), xxhash64(col("p_brand"), col("v")).as("sig"))
+          // One shuffle on the bucket key so each bucket lands as one
+          // sorted file; the writer's per-task sort is then exactly the
+          // bucket's rows (external, spillable) instead of a per-task
+          // re-sort of a mixed-bucket partition.
+          .repartition(buckets, col("sig")))
   }
 
   /** Get-or-build the FastSS deletion-signature artifact over part
-    * names: (p_brand, p_partkey, sig) with sig ranging over each name's
+    * names: (p_partkey, sig) with sig ranging over each name's
     * ≤k-deletion neighborhood hashes, BUCKETED by sig (32 buckets,
     * sorted by sig, p_partkey). The r12 sf10 sweep measured Q126's
     * in-memory signature self-join inadmissible at combinatorial-name
@@ -415,58 +362,10 @@ object Derived {
     * themselves — and every candidate is still verified by the banded
     * Levenshtein before it can reach the output.
     */
-  def fastssSignatures(spark: SparkSession, dir: String, k: Int): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "part")
-    val table = s"graft_fastss2_k${k}_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/fastss2_k${k}_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (p_partkey BIGINT, sig BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (sig) SORTED BY (sig, p_partkey) INTO 32 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    graft.Catalog(spark, dir).part
-      .select(col("p_brand"), col("p_partkey"),
-        explode(array_distinct(expr(s"graft_deletion_hashes(p_name, $k)")))
-          .as("v"))
-      .select(col("p_partkey"), xxhash64(col("p_brand"), col("v")).as("sig"))
-      // One shuffle on the bucket key so each bucket lands as one
-      // sorted file; the writer's per-task sort is then exactly the
-      // bucket's rows (external, spillable) instead of a per-task
-      // re-sort of a mixed-bucket partition.
-      .repartition(32, col("sig"))
-      .write.mode("overwrite")
-      .bucketBy(32, "sig").sortBy("sig", "p_partkey")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
+  def fastssSignatures(spark: SparkSession, dir: String, k: Int): DataFrame =
+    getOrBuild(spark, dir, fastss(k))
 
   /** Forced fresh rebuild of the FastSS signature artifact (sweep leg). */
-  def rebuildFastssSignatures(spark: SparkSession, dir: String, k: Int): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "part")
-    val table = s"graft_fastss2_k${k}_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/fastss2_k${k}_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    fastssSignatures(spark, dir, k)
-  }
-
-  /** Forced fresh rebuild of the near-dup artifacts for the bench. */
-  def rebuildNearDupClusters(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "documents")
-    for (name <- Seq("pairs", "cc")) {
-      val table = s"graft_neardup_${if (name == "cc") "cc" else "pairs"}_$key"
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val loc = new Path(s"${baseDir(spark)}/neardup_${name}_$key")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) { fs.delete(loc, true); () }
-    }
-    nearDupClusters(spark, dir)
-  }
+  def rebuildFastssSignatures(spark: SparkSession, dir: String, k: Int): DataFrame =
+    getOrBuild(spark, dir, fastss(k), fresh = Seq(fastss(k)))
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.functions.{CmsBuildAgg, CmsCountExpr, CmsMergeAgg, CmsQueryExpr, HeavyHitters, HllDistinct, HllEstimate, HllMergeAgg, HllSketchAgg, HllUnionEstimate, KllBuildAgg, KllCountExpr, KllMergeAgg, KllQuantileExpr, KllRankExpr, KmvDistinct, KmvEstimate, KmvIntersectEstimate, KmvJaccardEstimate, KmvMergeAgg, KmvSketchAgg, KmvUnionEstimate, TopK, VecSumAgg}
 
-/** Engine extensions. Two registration paths for the same functions:
+/** Engine extensions. Two registration paths for the same function list
+  * ([[GraftExtensions.functions]]):
   *
   *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session build
   *    (the proper deployment hook), or
@@ -15,25 +16,7 @@ import graft.functions.{CmsBuildAgg, CmsCountExpr, CmsMergeAgg, CmsQueryExpr, He
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotFunction)
-    ext.injectFunction(GraftExtensions.dotLongFunction)
-    ext.injectFunction(GraftExtensions.sqDistLongFunction)
-    ext.injectFunction(GraftExtensions.jwFunction)
-    ext.injectFunction(GraftExtensions.dtwFunction)
-    ext.injectFunction(GraftExtensions.lz76Function)
-    ext.injectFunction(GraftExtensions.hex32Function)
-    ext.injectFunction(GraftExtensions.lcsFunction)
-    ext.injectFunction(GraftExtensions.kmvFunction)
-    ext.injectFunction(GraftExtensions.hhFunction)
-    ext.injectFunction(GraftExtensions.rhFunction)
-    ext.injectFunction(GraftExtensions.dhFunction)
-    ext.injectFunction(GraftExtensions.topkFunction)
-    ext.injectFunction(GraftExtensions.vecSumFunction)
-    ext.injectFunction(GraftExtensions.bloomFunction)
-    GraftExtensions.kmvAlgebra.foreach(ext.injectFunction)
-    GraftExtensions.hllAlgebra.foreach(ext.injectFunction)
-    GraftExtensions.kllAlgebra.foreach(ext.injectFunction)
-    GraftExtensions.cmsAlgebra.foreach(ext.injectFunction)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => RewriteDotProduct)
   }
@@ -41,185 +24,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private val dotInfo = new ExpressionInfo(
-    classOf[DotProduct].getName, null, "graft_dot",
-    "graft_dot(x, y) - dot product of two float/double arrays with double accumulation in array order.",
-    "")
+  type SqlFunction = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_dot"), dotInfo,
-      (children: Seq[Expression]) => DotProduct(children(0), children(1)))
+  private def fn(name: String, cls: Class[_], usage: String)(
+      builder: Seq[Expression] => Expression): SqlFunction =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, null, name, usage, ""), builder)
 
-  private val dotLongInfo = new ExpressionInfo(
-    classOf[DotProductLong].getName, null, "graft_dot_long",
-    "graft_dot_long(x, y) - exact int64 dot product of two bigint/int arrays; " +
-      "NULL on length mismatch or null elements; overflow throws.",
-    "")
-
-  val dotLongFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_dot_long"), dotLongInfo,
-      (children: Seq[Expression]) => DotProductLong(children(0), children(1)))
-
-  private val sqDistLongInfo = new ExpressionInfo(
-    classOf[SqDistLong].getName, null, "graft_sqdist_long",
-    "graft_sqdist_long(x, y) - exact int64 squared L2 distance of two bigint/int " +
-      "arrays; NULL on length mismatch or null elements; overflow throws.",
-    "")
-
-  val sqDistLongFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_sqdist_long"), sqDistLongInfo,
-      (children: Seq[Expression]) => SqDistLong(children(0), children(1)))
-
-  private val jwInfo = new ExpressionInfo(
-    classOf[JaroWinkler].getName, null, "graft_jaro_winkler",
-    "graft_jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1]; " +
-      "prefix boost (cap 4, p=0.1) applied only when jaro > 0.7.",
-    "")
-
-  val jwFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_jaro_winkler"), jwInfo,
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1)))
-
-  private val dtwInfo = new ExpressionInfo(
-    classOf[Dtw].getName, null, "graft_dtw",
-    "graft_dtw(a, b, w) - banded (Sakoe-Chiba |i-j| <= w) dynamic-time-" +
-      "warping distance of two bigint arrays; exact int64; -1 when empty " +
-      "or the band cannot connect the endpoints.",
-    "")
-
-  val dtwFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_dtw"), dtwInfo,
-      (children: Seq[Expression]) => Dtw(children(0), children(1), children(2)))
-
-  private val lz76Info = new ExpressionInfo(
-    classOf[Lz76].getName, null, "graft_lz76",
-    "graft_lz76(s) - Lempel-Ziv 1976 production complexity (phrase count " +
-      "of the exhaustive-history parsing); exact integer, 0 for empty.",
-    "")
-
-  val lz76Function: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_lz76"), lz76Info,
-      (children: Seq[Expression]) => Lz76(children(0)))
-
-  private val hex32Info = new ExpressionInfo(
-    classOf[Hex32].getName, null, "graft_hex32",
-    "graft_hex32(h) - first-8-hex-chars value of a (md5) hash string; " +
-      "value-identical to the portable 8-term instr/substring chain.",
-    "")
-
-  val hex32Function: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_hex32"), hex32Info,
-      (children: Seq[Expression]) => Hex32(children(0)))
-
-  private val lcsInfo = new ExpressionInfo(
-    classOf[Lcs].getName, null, "graft_lcs",
-    "graft_lcs(a, b) - longest-common-subsequence length of two strings " +
-      "(Wagner-Fischer DP); exact integer, 0 when either side is empty.",
-    "")
-
-  val lcsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_lcs"), lcsInfo,
-      (children: Seq[Expression]) => Lcs(children(0), children(1)))
-
-  private def kmvBuilder(children: Seq[Expression]): Expression = {
-    val k = children(1) match {
+  private def intLitAt(children: Seq[Expression], pos: Int, fn: String): Int =
+    children(pos) match {
       case Literal(v: Int, _) => v
       case other => throw new IllegalArgumentException(
-        s"graft_kmv_distinct(col, k): k must be an integer literal, got $other")
+        s"$fn: argument ${pos + 1} must be an integer literal, got $other")
     }
-    KmvDistinct(children.head, k).toAggregateExpression()
-  }
 
-  private val kmvInfo = new ExpressionInfo(
-    classOf[KmvDistinct].getName, null, "graft_kmv_distinct",
-    "graft_kmv_distinct(col, k) - KMV distinct-count sketch estimate with k minimum values.",
-    "")
-
-  val kmvFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_kmv_distinct"), kmvInfo, kmvBuilder _)
-
-  private def hhBuilder(children: Seq[Expression]): Expression = {
-    val k = children(1) match {
+  private def intLit(children: Seq[Expression], fn: String): Int =
+    children(1) match {
       case Literal(v: Int, _) => v
       case other => throw new IllegalArgumentException(
-        s"graft_heavy_hitters(col, k): k must be an integer literal, got $other")
+        s"$fn(col, k): k must be an integer literal, got $other")
     }
-    HeavyHitters(children.head, k).toAggregateExpression()
-  }
-
-  private val hhInfo = new ExpressionInfo(
-    classOf[HeavyHitters].getName, null, "graft_heavy_hitters",
-    "graft_heavy_hitters(col, k) - Misra-Gries frequent-items sketch with k counters; " +
-      "returns array<struct<item,est>> sorted by estimate desc.",
-    "")
-
-  val hhFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_heavy_hitters"), hhInfo, hhBuilder _)
-
-  private def rhBuilder(children: Seq[Expression]): Expression = {
-    val k = children(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_rolling_hash(col, k): k must be an integer literal, got $other")
-    }
-    RollingHash(children.head, k)
-  }
-
-  private val rhInfo = new ExpressionInfo(
-    classOf[RollingHash].getName, null, "graft_rolling_hash",
-    "graft_rolling_hash(s, k) - all k-gram Rabin-Karp rolling hashes of s " +
-      "(base 1000003, mod 2^32) as array<bigint>, computed in one O(n) pass.",
-    "")
-
-  val rhFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_rolling_hash"), rhInfo, rhBuilder _)
-
-  private def dhBuilder(children: Seq[Expression]): Expression = {
-    val k = children(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_deletion_hashes(col, k): k must be an integer literal, got $other")
-    }
-    DeletionHashes(children.head, k)
-  }
-
-  private val dhInfo = new ExpressionInfo(
-    classOf[DeletionHashes].getName, null, "graft_deletion_hashes",
-    "graft_deletion_hashes(s, k) - FastSS deletion-neighborhood signatures for " +
-      "edit-distance <= k candidate generation (k in {1,2}): one 64-bit hash per " +
-      "variant of s with at most k characters deleted, as array<bigint>.",
-    "")
-
-  val dhFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_deletion_hashes"), dhInfo, dhBuilder _)
-
-  private def topkBuilder(children: Seq[Expression]): Expression = {
-    val k = children(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_topk(col, k): k must be an integer literal, got $other")
-    }
-    TopK(children.head, k).toAggregateExpression()
-  }
-
-  private val topkInfo = new ExpressionInfo(
-    classOf[TopK].getName, null, "graft_topk",
-    "graft_topk(col, k) - k largest values as a descending array<double>; " +
-      "O(k) heap state per group, map-side combinable.",
-    "")
-
-  val topkFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_topk"), topkInfo, topkBuilder _)
-
-  private val vecSumInfo = new ExpressionInfo(
-    classOf[VecSumAgg].getName, null, "graft_vec_sum",
-    "graft_vec_sum(arr) - element-wise sum of equal-length double/float arrays " +
-      "as array<double>; O(d) state per group, map-side combinable.",
-    "")
-
-  val vecSumFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_vec_sum"), vecSumInfo,
-      (c: Seq[Expression]) => VecSumAgg(c.head).toAggregateExpression())
 
   private def bloomBuilder(children: Seq[Expression]): Expression = {
     val bytes = children(1) match {
@@ -230,179 +53,152 @@ object GraftExtensions {
     BloomMightContain(children.head, bytes)
   }
 
-  private val bloomInfo = new ExpressionInfo(
-    classOf[BloomMightContain].getName, null, "graft_bloom_might_contain",
-    "graft_bloom_might_contain(key, filter) - codegen'd membership probe of key " +
-      "against a serialized Bloom filter (stat.bloomFilter layout).",
-    "")
+  /** Every graft_* SQL function, registered by both paths. */
+  val functions: Seq[SqlFunction] = Seq(
+    fn("graft_dot", classOf[DotProduct],
+      "graft_dot(x, y) - dot product of two float/double arrays with double accumulation in array order.")(
+      c => DotProduct(c(0), c(1))),
+    fn("graft_dot_long", classOf[DotProductLong],
+      "graft_dot_long(x, y) - exact int64 dot product of two bigint/int arrays; " +
+        "NULL on length mismatch or null elements; overflow throws.")(
+      c => DotProductLong(c(0), c(1))),
+    fn("graft_sqdist_long", classOf[SqDistLong],
+      "graft_sqdist_long(x, y) - exact int64 squared L2 distance of two bigint/int " +
+        "arrays; NULL on length mismatch or null elements; overflow throws.")(
+      c => SqDistLong(c(0), c(1))),
+    fn("graft_jaro_winkler", classOf[JaroWinkler],
+      "graft_jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1]; " +
+        "prefix boost (cap 4, p=0.1) applied only when jaro > 0.7.")(
+      c => JaroWinkler(c(0), c(1))),
+    fn("graft_dtw", classOf[Dtw],
+      "graft_dtw(a, b, w) - banded (Sakoe-Chiba |i-j| <= w) dynamic-time-" +
+        "warping distance of two bigint arrays; exact int64; -1 when empty " +
+        "or the band cannot connect the endpoints.")(
+      c => Dtw(c(0), c(1), c(2))),
+    fn("graft_lz76", classOf[Lz76],
+      "graft_lz76(s) - Lempel-Ziv 1976 production complexity (phrase count " +
+        "of the exhaustive-history parsing); exact integer, 0 for empty.")(
+      c => Lz76(c(0))),
+    fn("graft_hex32", classOf[Hex32],
+      "graft_hex32(h) - first-8-hex-chars value of a (md5) hash string; " +
+        "value-identical to the portable 8-term instr/substring chain.")(
+      c => Hex32(c(0))),
+    fn("graft_lcs", classOf[Lcs],
+      "graft_lcs(a, b) - longest-common-subsequence length of two strings " +
+        "(Wagner-Fischer DP); exact integer, 0 when either side is empty.")(
+      c => Lcs(c(0), c(1))),
+    fn("graft_kmv_distinct", classOf[KmvDistinct],
+      "graft_kmv_distinct(col, k) - KMV distinct-count sketch estimate with k minimum values.")(
+      c => KmvDistinct(c.head, intLit(c, "graft_kmv_distinct")).toAggregateExpression()),
+    fn("graft_heavy_hitters", classOf[HeavyHitters],
+      "graft_heavy_hitters(col, k) - Misra-Gries frequent-items sketch with k counters; " +
+        "returns array<struct<item,est>> sorted by estimate desc.")(
+      c => HeavyHitters(c.head, intLit(c, "graft_heavy_hitters")).toAggregateExpression()),
+    fn("graft_rolling_hash", classOf[RollingHash],
+      "graft_rolling_hash(s, k) - all k-gram Rabin-Karp rolling hashes of s " +
+        "(base 1000003, mod 2^32) as array<bigint>, computed in one O(n) pass.")(
+      c => RollingHash(c.head, intLit(c, "graft_rolling_hash"))),
+    fn("graft_deletion_hashes", classOf[DeletionHashes],
+      "graft_deletion_hashes(s, k) - FastSS deletion-neighborhood signatures for " +
+        "edit-distance <= k candidate generation (k in {1,2}): one 64-bit hash per " +
+        "variant of s with at most k characters deleted, as array<bigint>.")(
+      c => DeletionHashes(c.head, intLit(c, "graft_deletion_hashes"))),
+    fn("graft_topk", classOf[TopK],
+      "graft_topk(col, k) - k largest values as a descending array<double>; " +
+        "O(k) heap state per group, map-side combinable.")(
+      c => TopK(c.head, intLit(c, "graft_topk")).toAggregateExpression()),
+    fn("graft_vec_sum", classOf[VecSumAgg],
+      "graft_vec_sum(arr) - element-wise sum of equal-length double/float arrays " +
+        "as array<double>; O(d) state per group, map-side combinable.")(
+      c => VecSumAgg(c.head).toAggregateExpression()),
+    fn("graft_bloom_might_contain", classOf[BloomMightContain],
+      "graft_bloom_might_contain(key, filter) - codegen'd membership probe of key " +
+        "against a serialized Bloom filter (stat.bloomFilter layout).")(
+      bloomBuilder),
 
-  val bloomFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_bloom_might_contain"), bloomInfo, bloomBuilder _)
+    // The KMV sketch-column algebra (KmvSetOps.scala): build / merge
+    // aggregates plus estimate / union / intersect / jaccard scalars.
+    fn("graft_kmv_sketch", classOf[KmvSketchAgg],
+      "graft_kmv_sketch(col, k) - KMV sketch of the column's distinct values as binary.")(
+      c => KmvSketchAgg(c.head, intLit(c, "graft_kmv_sketch")).toAggregateExpression()),
+    fn("graft_kmv_merge", classOf[KmvMergeAgg],
+      "graft_kmv_merge(sketch, k) - union of already-built KMV sketches as binary.")(
+      c => KmvMergeAgg(c.head, intLit(c, "graft_kmv_merge")).toAggregateExpression()),
+    fn("graft_kmv_estimate", classOf[KmvEstimate],
+      "graft_kmv_estimate(sketch) - distinct-count estimate of a KMV sketch.")(
+      c => KmvEstimate(c.head)),
+    fn("graft_kmv_union", classOf[KmvUnionEstimate],
+      "graft_kmv_union(a, b) - estimated |A ∪ B| from two KMV sketches.")(
+      c => KmvUnionEstimate(c(0), c(1))),
+    fn("graft_kmv_intersect", classOf[KmvIntersectEstimate],
+      "graft_kmv_intersect(a, b) - estimated |A ∩ B| from two KMV sketches.")(
+      c => KmvIntersectEstimate(c(0), c(1))),
+    fn("graft_kmv_jaccard", classOf[KmvJaccardEstimate],
+      "graft_kmv_jaccard(a, b) - estimated Jaccard similarity from two KMV sketches.")(
+      c => KmvJaccardEstimate(c(0), c(1))),
 
-  private def intLit(children: Seq[Expression], fn: String): Int =
-    children(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn(col, k): k must be an integer literal, got $other")
-    }
+    // The HyperLogLog sketch-column algebra (Hll.scala): constant-size
+    // (2^p bytes) distinct counting — distinct / build / merge aggregates
+    // plus estimate / union scalars.
+    fn("graft_hll_distinct", classOf[HllDistinct],
+      "graft_hll_distinct(col, p) - HyperLogLog distinct-count estimate with 2^p registers.")(
+      c => HllDistinct(c.head, intLit(c, "graft_hll_distinct")).toAggregateExpression()),
+    fn("graft_hll_sketch", classOf[HllSketchAgg],
+      "graft_hll_sketch(col, p) - HyperLogLog register file of the column's distinct values as binary.")(
+      c => HllSketchAgg(c.head, intLit(c, "graft_hll_sketch")).toAggregateExpression()),
+    fn("graft_hll_merge", classOf[HllMergeAgg],
+      "graft_hll_merge(sketch, p) - register-wise-max rollup of already-built HLL sketches as binary.")(
+      c => HllMergeAgg(c.head, intLit(c, "graft_hll_merge")).toAggregateExpression()),
+    fn("graft_hll_estimate", classOf[HllEstimate],
+      "graft_hll_estimate(sketch) - distinct-count estimate of an HLL sketch.")(
+      c => HllEstimate(c.head)),
+    fn("graft_hll_union", classOf[HllUnionEstimate],
+      "graft_hll_union(a, b) - estimated |A ∪ B| from two equal-precision HLL sketches.")(
+      c => HllUnionEstimate(c(0), c(1))),
 
-  /** The KMV sketch-column algebra (KmvSetOps.scala): build / merge
-    * aggregates plus estimate / union / intersect / jaccard scalars.
+    // The KLL quantile-sketch column algebra (KllQuantile.scala): build /
+    // merge aggregates plus quantile / rank / exact-n scalars.
+    fn("graft_kll_sketch", classOf[KllBuildAgg],
+      "graft_kll_sketch(col, k) - KLL quantile sketch of a numeric column as binary.")(
+      c => KllBuildAgg(c.head, intLit(c, "graft_kll_sketch")).toAggregateExpression()),
+    fn("graft_kll_merge", classOf[KllMergeAgg],
+      "graft_kll_merge(sketch, k) - merge of already-built KLL sketches as binary.")(
+      c => KllMergeAgg(c.head, intLit(c, "graft_kll_merge")).toAggregateExpression()),
+    fn("graft_kll_quantile", classOf[KllQuantileExpr],
+      "graft_kll_quantile(sketch, q) - quantile probe of a KLL sketch; NULL when empty.")(
+      c => KllQuantileExpr(c(0), c(1))),
+    fn("graft_kll_rank", classOf[KllRankExpr],
+      "graft_kll_rank(sketch, x) - estimated fraction of mass <= x; NULL when empty.")(
+      c => KllRankExpr(c(0), c(1))),
+    fn("graft_kll_n", classOf[KllCountExpr],
+      "graft_kll_n(sketch) - exact total count folded into a KLL sketch.")(
+      c => KllCountExpr(c.head)),
+
+    // The Count-Min sketch-column algebra (CountMin.scala): build / merge
+    // aggregates plus point-frequency / exact-n scalars.
+    fn("graft_cms_sketch", classOf[CmsBuildAgg],
+      "graft_cms_sketch(col, depth, width) - Count-Min frequency sketch of a string column as binary.")(
+      c => CmsBuildAgg(c.head, intLitAt(c, 1, "graft_cms_sketch"),
+        intLitAt(c, 2, "graft_cms_sketch")).toAggregateExpression()),
+    fn("graft_cms_merge", classOf[CmsMergeAgg],
+      "graft_cms_merge(sketch) - elementwise rollup of already-built CMS sketches as binary.")(
+      c => CmsMergeAgg(c.head).toAggregateExpression()),
+    fn("graft_cms_query", classOf[CmsQueryExpr],
+      "graft_cms_query(sketch, item) - one-sided frequency estimate (never undercounts).")(
+      c => CmsQueryExpr(c(0), c(1))),
+    fn("graft_cms_n", classOf[CmsCountExpr],
+      "graft_cms_n(sketch) - exact total count folded into a CMS sketch.")(
+      c => CmsCountExpr(c.head)))
+
+  /** Idempotent runtime registration on an already-built session. Each
+    * function is registered once per session: re-registering would log
+    * Spark's "replaced a previously registered function" warning for
+    * every name on every query.
     */
-  val kmvAlgebra: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, null, "graft_kmv_sketch",
-        "graft_kmv_sketch(col, k) - KMV sketch of the column's distinct values as binary.", ""),
-      (c: Seq[Expression]) =>
-        KmvSketchAgg(c.head, intLit(c, "graft_kmv_sketch")).toAggregateExpression()),
-    (FunctionIdentifier("graft_kmv_merge"),
-      new ExpressionInfo(classOf[KmvMergeAgg].getName, null, "graft_kmv_merge",
-        "graft_kmv_merge(sketch, k) - union of already-built KMV sketches as binary.", ""),
-      (c: Seq[Expression]) =>
-        KmvMergeAgg(c.head, intLit(c, "graft_kmv_merge")).toAggregateExpression()),
-    (FunctionIdentifier("graft_kmv_estimate"),
-      new ExpressionInfo(classOf[KmvEstimate].getName, null, "graft_kmv_estimate",
-        "graft_kmv_estimate(sketch) - distinct-count estimate of a KMV sketch.", ""),
-      (c: Seq[Expression]) => KmvEstimate(c.head)),
-    (FunctionIdentifier("graft_kmv_union"),
-      new ExpressionInfo(classOf[KmvUnionEstimate].getName, null, "graft_kmv_union",
-        "graft_kmv_union(a, b) - estimated |A ∪ B| from two KMV sketches.", ""),
-      (c: Seq[Expression]) => KmvUnionEstimate(c(0), c(1))),
-    (FunctionIdentifier("graft_kmv_intersect"),
-      new ExpressionInfo(classOf[KmvIntersectEstimate].getName, null, "graft_kmv_intersect",
-        "graft_kmv_intersect(a, b) - estimated |A ∩ B| from two KMV sketches.", ""),
-      (c: Seq[Expression]) => KmvIntersectEstimate(c(0), c(1))),
-    (FunctionIdentifier("graft_kmv_jaccard"),
-      new ExpressionInfo(classOf[KmvJaccardEstimate].getName, null, "graft_kmv_jaccard",
-        "graft_kmv_jaccard(a, b) - estimated Jaccard similarity from two KMV sketches.", ""),
-      (c: Seq[Expression]) => KmvJaccardEstimate(c(0), c(1))))
-
-  /** The HyperLogLog sketch-column algebra (Hll.scala): constant-size
-    * (2^p bytes) distinct counting — distinct / build / merge aggregates
-    * plus estimate / union scalars.
-    */
-  val hllAlgebra: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_hll_distinct"),
-      new ExpressionInfo(classOf[HllDistinct].getName, null, "graft_hll_distinct",
-        "graft_hll_distinct(col, p) - HyperLogLog distinct-count estimate with 2^p registers.", ""),
-      (c: Seq[Expression]) =>
-        HllDistinct(c.head, intLit(c, "graft_hll_distinct")).toAggregateExpression()),
-    (FunctionIdentifier("graft_hll_sketch"),
-      new ExpressionInfo(classOf[HllSketchAgg].getName, null, "graft_hll_sketch",
-        "graft_hll_sketch(col, p) - HyperLogLog register file of the column's distinct values as binary.", ""),
-      (c: Seq[Expression]) =>
-        HllSketchAgg(c.head, intLit(c, "graft_hll_sketch")).toAggregateExpression()),
-    (FunctionIdentifier("graft_hll_merge"),
-      new ExpressionInfo(classOf[HllMergeAgg].getName, null, "graft_hll_merge",
-        "graft_hll_merge(sketch, p) - register-wise-max rollup of already-built HLL sketches as binary.", ""),
-      (c: Seq[Expression]) =>
-        HllMergeAgg(c.head, intLit(c, "graft_hll_merge")).toAggregateExpression()),
-    (FunctionIdentifier("graft_hll_estimate"),
-      new ExpressionInfo(classOf[HllEstimate].getName, null, "graft_hll_estimate",
-        "graft_hll_estimate(sketch) - distinct-count estimate of an HLL sketch.", ""),
-      (c: Seq[Expression]) => HllEstimate(c.head)),
-    (FunctionIdentifier("graft_hll_union"),
-      new ExpressionInfo(classOf[HllUnionEstimate].getName, null, "graft_hll_union",
-        "graft_hll_union(a, b) - estimated |A ∪ B| from two equal-precision HLL sketches.", ""),
-      (c: Seq[Expression]) => HllUnionEstimate(c(0), c(1))))
-
-  private def intLitAt(children: Seq[Expression], pos: Int, fn: String): Int =
-    children(pos) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be an integer literal, got $other")
-    }
-
-  /** The Count-Min sketch-column algebra (CountMin.scala): build / merge
-    * aggregates plus point-frequency / exact-n scalars.
-    */
-  val cmsAlgebra: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_cms_sketch"),
-      new ExpressionInfo(classOf[CmsBuildAgg].getName, null, "graft_cms_sketch",
-        "graft_cms_sketch(col, depth, width) - Count-Min frequency sketch of a string column as binary.", ""),
-      (c: Seq[Expression]) =>
-        CmsBuildAgg(c.head, intLitAt(c, 1, "graft_cms_sketch"),
-          intLitAt(c, 2, "graft_cms_sketch")).toAggregateExpression()),
-    (FunctionIdentifier("graft_cms_merge"),
-      new ExpressionInfo(classOf[CmsMergeAgg].getName, null, "graft_cms_merge",
-        "graft_cms_merge(sketch) - elementwise rollup of already-built CMS sketches as binary.", ""),
-      (c: Seq[Expression]) => CmsMergeAgg(c.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_cms_query"),
-      new ExpressionInfo(classOf[CmsQueryExpr].getName, null, "graft_cms_query",
-        "graft_cms_query(sketch, item) - one-sided frequency estimate (never undercounts).", ""),
-      (c: Seq[Expression]) => CmsQueryExpr(c(0), c(1))),
-    (FunctionIdentifier("graft_cms_n"),
-      new ExpressionInfo(classOf[CmsCountExpr].getName, null, "graft_cms_n",
-        "graft_cms_n(sketch) - exact total count folded into a CMS sketch.", ""),
-      (c: Seq[Expression]) => CmsCountExpr(c.head)))
-
-  /** The KLL quantile-sketch column algebra (KllQuantile.scala): build /
-    * merge aggregates plus quantile / rank / exact-n scalars.
-    */
-  val kllAlgebra: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_kll_sketch"),
-      new ExpressionInfo(classOf[KllBuildAgg].getName, null, "graft_kll_sketch",
-        "graft_kll_sketch(col, k) - KLL quantile sketch of a numeric column as binary.", ""),
-      (c: Seq[Expression]) =>
-        KllBuildAgg(c.head, intLit(c, "graft_kll_sketch")).toAggregateExpression()),
-    (FunctionIdentifier("graft_kll_merge"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, null, "graft_kll_merge",
-        "graft_kll_merge(sketch, k) - merge of already-built KLL sketches as binary.", ""),
-      (c: Seq[Expression]) =>
-        KllMergeAgg(c.head, intLit(c, "graft_kll_merge")).toAggregateExpression()),
-    (FunctionIdentifier("graft_kll_quantile"),
-      new ExpressionInfo(classOf[KllQuantileExpr].getName, null, "graft_kll_quantile",
-        "graft_kll_quantile(sketch, q) - quantile probe of a KLL sketch; NULL when empty.", ""),
-      (c: Seq[Expression]) => KllQuantileExpr(c(0), c(1))),
-    (FunctionIdentifier("graft_kll_rank"),
-      new ExpressionInfo(classOf[KllRankExpr].getName, null, "graft_kll_rank",
-        "graft_kll_rank(sketch, x) - estimated fraction of mass <= x; NULL when empty.", ""),
-      (c: Seq[Expression]) => KllRankExpr(c(0), c(1))),
-    (FunctionIdentifier("graft_kll_n"),
-      new ExpressionInfo(classOf[KllCountExpr].getName, null, "graft_kll_n",
-        "graft_kll_n(sketch) - exact total count folded into a KLL sketch.", ""),
-      (c: Seq[Expression]) => KllCountExpr(c.head)))
-
-  /** Idempotent runtime registration on an already-built session. */
   def registerRuntime(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", children => DotProduct(children(0), children(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_long",
-      children => DotProductLong(children(0), children(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist_long",
-      children => SqDistLong(children(0), children(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      children => JaroWinkler(children(0), children(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dtw",
-      children => Dtw(children(0), children(1), children(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lz76", children => Lz76(children(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hex32", children => Hex32(children(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lcs", children => Lcs(children(0), children(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv_distinct", kmvBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters", hhBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", rhBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deletion_hashes", dhBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", topkBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_sum",
-      c => VecSumAgg(c.head).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", bloomBuilder, "built-in")
-    (kmvAlgebra ++ hllAlgebra ++ kllAlgebra ++ cmsAlgebra).foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
       spark.experimental.extraStrategies =
